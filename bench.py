@@ -45,17 +45,14 @@ def _probe_gbps(seconds: float = 2.0) -> float:
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_bench_docs = int(os.environ.get("BENCH_DOCS", "200000"))
-
     from ner_spark import queries as Qmod
     from ner_spark import synth
-    from ner_spark.operators import consensus as C
-    from ner_spark.operators.clean import clean
-    from ner_spark.operators.relations import extract_triples
     from ner_spark.plans.pipeline import KGPipeline
-    from ner_spark.session import get_spark
+    from ner_spark.session import get_spark, host_cpus
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
+    n_bench_docs = int(os.environ.get("BENCH_DOCS", "200000"))
 
     probe_before = _probe_gbps()
 
@@ -100,18 +97,9 @@ def main() -> int:
     docs = synth.synth_docs(spark, n_bench_docs, seed=42)
     def run_pipe() -> float:
         t0 = time.time()
-        cd = clean(docs).cache()
-        fused = C.fuse_ranked(pipe.ranked_mentions(cd))
-        voted = C.promote_trusted(C.priority_vote(fused), combos).cache()
-        # populate the caches eagerly: extract_triples fans out into three
-        # consumers of `voted`; against a cold cache each branch recomputes
-        # the whole extraction chain concurrently (measured 3x the chain
-        # cost; eager also measured faster on interleaved repeats)
-        voted.count()
-        _force(extract_triples(voted, cd))
+        _force(pipe.run(docs)["triples"])
         sec = time.time() - t0
-        cd.unpersist()
-        voted.unpersist()
+        pipe.unpersist()
         return sec
 
     # first run pays per-stage JIT + codegen + Python-worker module imports

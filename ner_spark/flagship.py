@@ -89,16 +89,12 @@ def _flagship_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         out = pipe.run(docs_as_spans(documents))
         # pipe.run caches clean+mentions (MEMORY_AND_DISK) and eagerly
         # materializes them; keep the references for the session lifetime
-        st = {"clean": out["clean"], "mentions": out["mentions"]}
-        _STAGE_MEMO[key] = st
+        st = _STAGE_MEMO[key] = out
     return st
 
 
 def flagship_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import relations as R
-
-    st = _flagship_stages(spark, sf_dir)
-    return R.extract_triples(st["mentions"], st["clean"])
+    return _flagship_stages(spark, sf_dir)["triples"]
 
 
 #: relation rule bank matched to the driver corpus vocabulary. The default

@@ -14,7 +14,8 @@ hash bucket of ``doc_uid`` (stable at any parallelism). On (re)run:
    so a crash mid-write re-does only the unfinished buckets.
 
 Global stages (connected components) cannot be bucket-partial; they
-checkpoint all-or-nothing under the same manifest mechanism.
+checkpoint all-or-nothing as a one-bucket write through the same locked
+section (``Runner._locked_write``) as every per-bucket stage.
 
 Concurrent runs: a lease-based writer fence (Catalog.try_acquire_writer)
 admits exactly ONE writer per stage TABLE — table-granular, not
@@ -113,7 +114,7 @@ class Runner:
         sub-ms window; see Catalog.try_acquire_writer), so single-WRITER
         safety is enforced here: whoever's token is on disk at write time
         writes; everyone else raises LeaseLost and falls back to waiting
-        on the owner (stage/global_stage catch it and re-enter the
+        on the owner (_locked_write catches it and re-enters the
         acquire-or-wait loop)."""
         if (lost is not None and lost.is_set()) or not self.catalog.owns_writer(name):
             raise LeaseLost(
@@ -149,40 +150,39 @@ class Runner:
                 )
             time.sleep(self.writer_poll_sec)
 
-    def stage(
-        self,
-        name: str,
-        input_df: DataFrame,
-        transform: Callable[[DataFrame], DataFrame],
-        key: str = "doc_uid",
-        input_fingerprint: str = "",
-        params: str = "",
+    def _locked_write(
+        self, name: str, fingerprint: str, n_buckets: int,
+        compute: Callable[[list[int]], DataFrame],
     ) -> tuple[DataFrame, str]:
-        """Run one bucket-resumable stage; returns (full output DF, fp)."""
+        """The one locked section every stage write goes through.
+
+        acquire-or-wait -> heartbeat -> claim the fingerprint -> prune
+        torn writes -> ``compute(missing)`` (a DataFrame carrying
+        ``BUCKET_COL``, covering the missing buckets) -> lease check ->
+        write -> record the buckets that produced no rows -> release.
+        A writer whose lease is broken and reissued discards its attempt
+        (before any write) and re-enters acquire-or-wait — the new owner is
+        doing the work. Returns (full output DF, fingerprint).
+        """
         t0 = time.time()
-        fingerprint = _fp(name, input_fingerprint, params, str(self.n_buckets))
-        all_buckets = set(range(self.n_buckets))
-        rows_written = 0
-        done: set[int] = set()
-        missing: list[int] = []
-        # lease-lost retry loop: an admitted writer whose lease is broken
-        # and reissued discards its attempt (before any write) and
-        # re-enters acquire-or-wait — the new owner is doing the work
+        all_buckets = set(range(n_buckets))
         for _attempt in range(3):
             acquired = self._acquire_or_wait(
                 name,
                 fingerprint,
-                lambda: not (all_buckets - self.catalog.completed_buckets(name, fingerprint)),
+                lambda: all_buckets <= self.catalog.completed_buckets(name, fingerprint),
             )
             heartbeat, lost = (
                 self._start_heartbeat(name, fingerprint) if acquired else (None, None)
             )
             try:
-                # wipe stale data from any previous fingerprint (claim runs
-                # under the writer fence so a racing peer can't interleave
-                # the reset with our data write; the lock is TABLE-granular,
-                # so different-fingerprint racers serialize here too)
+                rows = 0
                 if acquired:
+                    # wipe stale data from any previous fingerprint (claim
+                    # runs under the writer fence so a racing peer can't
+                    # interleave the reset with our data write; the lock is
+                    # TABLE-granular, so different-fingerprint racers
+                    # serialize here too)
                     self.catalog.claim_fingerprint(name, fingerprint)
                 done = self.catalog.completed_buckets(name, fingerprint)
                 missing = sorted(all_buckets - done) if acquired else []
@@ -193,15 +193,12 @@ class Runner:
                     # rows
                     self.catalog.prune_unmanifested(name, done)
                 if missing:
-                    bucketed_in = with_bucket(input_df, key, self.n_buckets)
-                    todo = bucketed_in.filter(F.col(BUCKET_COL).isin(missing)).drop(BUCKET_COL)
-                    out = transform(todo)
-                    out_bucketed = with_bucket(out, key, self.n_buckets)
+                    out = compute(missing)
                     self._check_lease(name, lost)
                     manifest = self.catalog.write_buckets(
-                        out_bucketed, name, fingerprint, stage=name, buckets=missing
+                        out, name, fingerprint, stage=name, buckets=missing
                     )
-                    rows_written = sum(r["rows"] for r in manifest)
+                    rows = sum(r["rows"] for r in manifest)
                     # buckets with zero output rows still count as completed
                     written = {r["bucket"] for r in manifest}
                     empty = [
@@ -222,7 +219,6 @@ class Runner:
                         self.catalog.record(name, empty)
                 break
             except LeaseLost:
-                done, missing, rows_written = set(), [], 0
                 continue
             finally:
                 if heartbeat is not None:
@@ -230,20 +226,37 @@ class Runner:
                 if acquired:
                     self.catalog.release_writer(name, fingerprint)
         else:
-            raise TimeoutError(
-                f"stage {name}: lease lost on every attempt — giving up"
+            raise TimeoutError(f"stage {name}: lease lost on every attempt — giving up")
+        self.metrics.append(
+            StageResult(
+                table=name,
+                fingerprint=fingerprint,
+                skipped_buckets=len(done),
+                computed_buckets=len(missing),
+                rows=rows,
+                wall_ms=int((time.time() - t0) * 1000),
             )
-        result = StageResult(
-            table=name,
-            fingerprint=fingerprint,
-            skipped_buckets=len(done),
-            computed_buckets=len(missing),
-            rows=rows_written,
-            wall_ms=int((time.time() - t0) * 1000),
         )
-        self.metrics.append(result)
-        out_df = self.catalog.read(self.spark, name).drop(BUCKET_COL)
-        return out_df, fingerprint
+        return self.catalog.read(self.spark, name).drop(BUCKET_COL), fingerprint
+
+    def stage(
+        self,
+        name: str,
+        input_df: DataFrame,
+        transform: Callable[[DataFrame], DataFrame],
+        key: str = "doc_uid",
+        input_fingerprint: str = "",
+        params: str = "",
+    ) -> tuple[DataFrame, str]:
+        """Run one bucket-resumable stage; returns (full output DF, fp)."""
+        fingerprint = _fp(name, input_fingerprint, params, str(self.n_buckets))
+
+        def compute(missing: list[int]) -> DataFrame:
+            bucketed_in = with_bucket(input_df, key, self.n_buckets)
+            todo = bucketed_in.filter(F.col(BUCKET_COL).isin(missing)).drop(BUCKET_COL)
+            return with_bucket(transform(todo), key, self.n_buckets)
+
+        return self._locked_write(name, fingerprint, self.n_buckets, compute)
 
     def global_stage(
         self,
@@ -252,94 +265,12 @@ class Runner:
         input_fingerprint: str = "",
         params: str = "",
     ) -> tuple[DataFrame, str]:
-        """All-or-nothing stage (e.g. connected components)."""
-        t0 = time.time()
+        """All-or-nothing stage (e.g. connected components): a one-bucket
+        write of ``compute()`` into bucket 0."""
         fingerprint = _fp(name, input_fingerprint, params)
-        done: set[int] = set()
-        for _attempt in range(3):
-            acquired = self._acquire_or_wait(
-                name,
-                fingerprint,
-                lambda: bool(self.catalog.completed_buckets(name, fingerprint)),
-            )
-            heartbeat, lost = (
-                self._start_heartbeat(name, fingerprint) if acquired else (None, None)
-            )
-            try:
-                if acquired:
-                    self.catalog.claim_fingerprint(name, fingerprint)
-                done = self.catalog.completed_buckets(name, fingerprint)
-                if not done and acquired:
-                    # all-or-nothing stage: nothing is manifested, so any
-                    # leftover data is a predecessor's torn write — drop it
-                    self.catalog.prune_unmanifested(name, set())
-                    out = compute()
-                    self._check_lease(name, lost)
-                    manifest = self.catalog.write_buckets(
-                        out.withColumn(BUCKET_COL, F.lit(0)), name, fingerprint, stage=name
-                    )
-                    if not manifest:
-                        # a legitimately-empty result writes no parquet and
-                        # hence no manifest row; without an explicit
-                        # completion marker every resume would re-run the
-                        # whole compute() (the per-bucket stage above
-                        # handles this with its empty-bucket rows). The
-                        # empty frame is rewritten UNPARTITIONED: a
-                        # partitioned empty write leaves only _SUCCESS and
-                        # the read-back cannot infer a schema, while the
-                        # unpartitioned form writes one schema-bearing
-                        # (0-row) parquet file. Built from the schema, NOT
-                        # from `out` — write_buckets already executed the
-                        # full compute() DAG once to learn it was empty,
-                        # and re-writing `out` would run that whole DAG a
-                        # second time just to produce 0 rows.
-                        self.spark.createDataFrame([], out.schema).withColumn(
-                            BUCKET_COL, F.lit(0)
-                        ).write.mode("overwrite").parquet(self.catalog.table_dir(name))
-                        self.catalog.record(
-                            name,
-                            [
-                                {
-                                    "stage": name,
-                                    "table": name,
-                                    "bucket": 0,
-                                    "fingerprint": fingerprint,
-                                    "rows": 0,
-                                    "wall_ms": 0,
-                                    "ts": time.time(),
-                                }
-                            ],
-                        )
-                break
-            except LeaseLost:
-                done = set()
-                continue
-            finally:
-                if heartbeat is not None:
-                    heartbeat.set()
-                if acquired:
-                    self.catalog.release_writer(name, fingerprint)
-        else:
-            raise TimeoutError(
-                f"stage {name}: lease lost on every attempt — giving up"
-            )
-        result_df = self.catalog.read(self.spark, name).drop(BUCKET_COL)
-        rows_written = sum(
-            r["rows"]
-            for r in self.catalog.manifest_rows(name)
-            if r["fingerprint"] == fingerprint
+        return self._locked_write(
+            name, fingerprint, 1, lambda _: compute().withColumn(BUCKET_COL, F.lit(0))
         )
-        self.metrics.append(
-            StageResult(
-                table=name,
-                fingerprint=fingerprint,
-                skipped_buckets=1 if done else 0,
-                computed_buckets=0 if done else 1,
-                rows=rows_written,
-                wall_ms=int((time.time() - t0) * 1000),
-            )
-        )
-        return result_df, fingerprint
 
     def metrics_json(self) -> list[dict]:
         return [

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (its CPU affinity, not the machine)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_memory() -> str:
+    """About a quarter of the host's RAM in whole GB, between 1g and 32g:
+    the driver JVM shares the host with its Python workers and page cache."""
+    with open("/proc/meminfo", encoding="ascii") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(max(round(kb / (4 * 1024 * 1024)), 1), 32)}g"
+
+
 def get_spark(
     app_name: str = "ner_spark",
     master: str | None = None,
@@ -21,11 +34,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    host's cores); the driver heap is ``$SPARK_DRIVER_MEM`` (env, default
+    ``host_driver_memory()``).
     ``shuffle_partitions`` defaults to the core count of the master string —
     at cluster scale you would set this to ~2-3x total cores instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -43,7 +58,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` from every

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "_bucket"
+#: bucket dir of the zero-row file that carries an all-empty table's schema
+SCHEMA_BUCKET = -1
 
 
 def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -39,6 +41,36 @@ def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
         BUCKET_COL,
         F.pmod(md5_60(F.col(key).cast("string")), F.lit(n_buckets)).cast("int"),
     )
+
+
+def _remove_lock(path: str, token: str) -> bool | None:
+    """The one way a writer lock is removed: iff it carries ``token``.
+
+    The lock is renamed to a unique tombstone (atomic: of racing removers
+    exactly one gets it), its token is read back, and a lock that turns out
+    to carry another token — a racer broke the one we measured and created
+    a fresh, live one before our rename — is restored with ``os.link``
+    (which fails if a third racer already created a new lock at ``path``;
+    that survivor keeps it, and the yanked owner's token-verified heartbeat
+    flags the loss so it aborts before writing). Returns True if removed,
+    False if the lock was someone else's, None if there was no lock."""
+    tomb = f"{path}.tomb.{uuid.uuid4().hex}"
+    try:
+        os.rename(path, tomb)
+    except FileNotFoundError:
+        return None
+    try:
+        with open(tomb, encoding="utf-8") as f:
+            yanked_token = f.read().split(" ", 1)[0]
+    except OSError:
+        yanked_token = None
+    if yanked_token != token:
+        try:
+            os.link(tomb, path)
+        except OSError:
+            pass
+    os.remove(tomb)
+    return yanked_token == token
 
 
 @dataclass
@@ -162,33 +194,10 @@ class Catalog:
                     continue  # released between the two checks — retry
                 if age <= lease_sec:
                     return False
-                tomb = f"{path}.tomb.{token}"
-                try:
-                    os.rename(path, tomb)  # atomic: one breaker wins
-                except FileNotFoundError:
-                    continue  # another breaker / a release got it — retry
-                # verify we yanked the lock we MEASURED as stale: a racing
-                # breaker may have broken it and recreated a fresh lock
-                # between our stat and our rename — renaming that live
-                # lock away would admit a second writer
-                try:
-                    with open(tomb, encoding="utf-8") as f:
-                        yanked_token = f.read().split(" ", 1)[0]
-                except OSError:
-                    yanked_token = None
-                if yanked_token == stale_token:
-                    os.remove(tomb)  # correct break — retry the create
-                    continue
-                # yanked a LIVE lock: restore it atomically (link fails if
-                # a third racer already created a new lock at path; that
-                # survivor keeps it, and the yanked owner's token-verified
-                # heartbeat flags the loss so it aborts before writing)
-                try:
-                    os.link(tomb, path)
-                except (FileExistsError, OSError):
-                    pass
-                os.remove(tomb)
-                return False
+                # a correct break, or a lock already gone (another breaker
+                # or a release got it), earns another create attempt
+                if _remove_lock(path, stale_token) is False:
+                    return False
         return False
 
     def owns_writer(self, table: str, fingerprint: str = "") -> bool:
@@ -217,22 +226,15 @@ class Catalog:
             return False
 
     def release_writer(self, table: str, fingerprint: str = "") -> None:
-        """Remove the lock only if this catalog still owns it (token
-        verify immediately before the unlink). If the lease was broken and
-        reissued while we ran, the new owner's lock is left untouched —
-        the old owner's finally-block must not admit a third writer by
-        deleting a live lock it no longer holds."""
+        """Remove the lock only if this catalog still owns it, through the
+        same atomic rename + token verify the stale-lease break uses. If
+        the lease was broken and reissued while we ran, the new owner's
+        lock is restored untouched — the old owner's finally-block must not
+        admit a third writer by deleting a live lock it no longer holds."""
         path = self.writer_lock_path(table)
         token = self._owned.pop(path, None)
-        if token is None:
-            return
-        try:
-            with open(path, encoding="utf-8") as f:
-                if f.read().split(" ", 1)[0] != token:
-                    return  # lease was broken + reissued: not ours anymore
-            os.remove(path)
-        except OSError:
-            pass
+        if token is not None:
+            _remove_lock(path, token)
 
     def prune_unmanifested(self, table: str, keep: set[int]) -> list[int]:
         """Remove bucket dirs that are NOT in the completed-manifest set.
@@ -259,7 +261,9 @@ class Catalog:
             full = os.path.join(tdir, d)
             m = re.fullmatch(rf"{BUCKET_COL}=(-?\d+)", d)
             if m and os.path.isdir(full):
-                if int(m.group(1)) not in keep:
+                # the empty-table schema marker holds no rows and no
+                # manifest entry; without it an all-empty table is unreadable
+                if int(m.group(1)) not in keep | {SCHEMA_BUCKET}:
                     shutil.rmtree(full, ignore_errors=True)
                     pruned.append(int(m.group(1)))
             elif d.startswith("_temporary"):
@@ -338,7 +342,7 @@ class Catalog:
 
         if not _glob.glob(os.path.join(self.table_dir(table), "**", "*.parquet"), recursive=True):
             df.drop(BUCKET_COL).limit(0).write.mode("overwrite").parquet(
-                os.path.join(self.table_dir(table), f"{BUCKET_COL}=-1")
+                os.path.join(self.table_dir(table), f"{BUCKET_COL}={SCHEMA_BUCKET}")
             )
         wall_ms = int((time.time() - t0) * 1000)
         written = spark.read.parquet(self.table_dir(table))

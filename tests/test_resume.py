@@ -13,8 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_spark import synth
-from ner_spark.operators import consensus as C
-from ner_spark.operators.clean import dedup_docs, normalize_docs
+from ner_spark.operators.clean import normalize_docs
 from ner_spark.plans.pipeline import KGPipeline
 from ner_spark.plans.runner import Runner
 from ner_spark.sources.catalog import Catalog
@@ -22,26 +21,17 @@ from ner_spark.sources.catalog import Catalog
 N_BUCKETS = 4
 
 
-def _build(spark, out_dir):
-    docs = synth.synth_docs(spark, 200, seed=42)
-    gaz = synth.synth_gazetteer(spark)
-    pat = synth.synth_patterns(spark)
+def _pipe(spark):
     combos = [c["slots"] for c in synth.TRUSTED_COMBOS]
-    pipe = KGPipeline(gazetteer=gaz, patterns=pat, trusted_combos=combos)
+    return KGPipeline(gazetteer=synth.synth_gazetteer(spark),
+                      patterns=synth.synth_patterns(spark), trusted_combos=combos)
+
+
+def _build(spark, out_dir, until="s3_consensus"):
+    docs = synth.synth_docs(spark, 200, seed=42)
     runner = Runner(spark=spark, catalog=Catalog(str(out_dir)), n_buckets=N_BUCKETS)
-
-    s0, fp0 = runner.stage("s0_normalize", docs, normalize_docs, key="doc_id",
-                           input_fingerprint="synth:200:42")
-    s1, fp1 = runner.stage("s1_dedup", s0, dedup_docs, key="text",
-                           input_fingerprint=fp0)
-
-    def consensus_transform(clean_part):
-        fused = C.fuse_ranked(pipe.ranked_mentions(clean_part))
-        return C.promote_trusted(C.priority_vote(fused), combos)
-
-    s3, fp3 = runner.stage("s3_consensus", s1, consensus_transform,
-                           key="doc_uid", input_fingerprint=fp1)
-    return runner, s3
+    tables = _pipe(spark).run_checkpointed(docs, runner, "synth:200:42", until=until)
+    return runner, tables[until][0]
 
 
 @pytest.fixture(scope="module")
@@ -121,25 +111,61 @@ def test_changed_input_invalidates_downstream(spark, tmp_path_factory):
     assert runner2.metrics[0].computed_buckets == N_BUCKETS
 
 
-def test_global_stage_empty_result_resumes_without_recompute(spark, tmp_path_factory):
-    """A legitimately-empty global-stage output must still record
-    completion: the resume contract is zero recomputation, including for
-    stages whose correct answer is an empty table."""
-    out = tmp_path_factory.mktemp("empty_global")
+@pytest.mark.parametrize("kind", ["per_bucket", "global"])
+def test_global_stage_empty_result_resumes_without_recompute(spark, tmp_path_factory, kind):
+    """A legitimately-empty stage output must still record completion and
+    stay readable: the resume contract is zero recomputation, including for
+    stages whose correct answer is an empty table. The per-bucket case
+    guards the zero-row schema marker against the resume's torn-write
+    prune (pruning it made the read-back fail schema inference)."""
+    out = tmp_path_factory.mktemp(f"empty_{kind}")
     calls = {"n": 0}
 
-    def compute():
+    src = spark.range(3).selectExpr("id as src")
+
+    def empty(df):
         calls["n"] += 1
-        return spark.range(0).selectExpr("id as src", "id as dst")
+        return df.selectExpr("src", "src as dst").filter("src < 0")
+
+    def run(runner):
+        if kind == "global":
+            return runner.global_stage("g_empty", lambda: empty(src), input_fingerprint="x")
+        return runner.stage("g_empty", src, empty, key="src", input_fingerprint="x")
 
     r1 = Runner(spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS)
-    df1, fp = r1.global_stage("g_empty", compute, input_fingerprint="x")
+    df1, fp = run(r1)
     assert df1.count() == 0 and calls["n"] == 1
 
     r2 = Runner(spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS)
-    df2, fp2 = r2.global_stage("g_empty", compute, input_fingerprint="x")
+    df2, fp2 = run(r2)
     assert df2.count() == 0 and fp2 == fp
+    assert df2.columns == ["src", "dst"]
     assert calls["n"] == 1  # resume did NOT re-run the compute
+    assert r2.metrics[0].computed_buckets == 0
+
+
+def _same_rows(a, b) -> bool:
+    b = b.select(*a.columns)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_in_memory_and_checkpointed_runs_agree(spark, tmp_path_factory):
+    """One stage list, two executions: the checkpointed s1/s3/s4 tables are
+    row-set equal to the in-memory clean/mentions/triples."""
+    out = tmp_path_factory.mktemp("kg_inmem_vs_ckpt")
+    _build(spark, out, until="s4_triples")
+    cat = Catalog(str(out))
+    pipe = _pipe(spark)
+    mem = pipe.run(synth.synth_docs(spark, 200, seed=42))
+    try:
+        for stage, name in [("s1_dedup", "clean"), ("s3_consensus", "mentions"),
+                            ("s4_triples", "triples")]:
+            ckpt = cat.read(spark, stage).drop("_bucket")
+            assert sorted(ckpt.columns) == sorted(mem[name].columns), stage
+            assert ckpt.count() > 0, stage
+            assert _same_rows(mem[name], ckpt), stage
+    finally:
+        pipe.unpersist()
 
 
 def test_concurrent_runners_one_winner_zero_duplicates(spark, tmp_path_factory):

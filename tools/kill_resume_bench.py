@@ -12,9 +12,12 @@ verify
 2. the dead writer's lease is taken over (the killed process leaves its
    lock behind; the successor breaks it after ``--writer-lease-sec`` via
    the atomic tombstone rename) — measured as takeover wait;
-3. the final tables are value-identical to an uninterrupted control run
+3. every stage table is value-identical to an uninterrupted control run
    into a separate directory (count + order-insensitive row-hash per
    table, via DuckDB).
+
+The stage names, and which stages are global (one bucket), come from the
+stage list ``ner_spark.plans.pipeline.KG_STAGES``.
 
 Usage:
     python tools/kill_resume_bench.py [n_docs] [out_json]
@@ -35,17 +38,13 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-STAGES = [
-    "s0_normalize",
-    "s1_dedup",
-    "s3_consensus",
-    "s4_triples",
-    "s5_linked",
-    "s6_canonical",
-    "s7_edges",
-    "s8_nodes",
-]
+from ner_spark.plans.pipeline import GLOBAL, KG_STAGES  # noqa: E402
+
+N_BUCKETS = 32
+#: stage -> buckets a complete run manifests
+STAGES = {s.name: 1 if s.key == GLOBAL else N_BUCKETS for s in KG_STAGES}
 
 
 def _manifest_buckets(out_dir: str) -> dict[str, int]:
@@ -71,7 +70,7 @@ def _cmd(n_docs: int, out_dir: str, lease: float) -> list[str]:
         "--master",
         "local[32]",
         "--n-buckets",
-        "32",
+        str(N_BUCKETS),
         "--writer-lease-sec",
         str(lease),
         "--writer-wait-sec",
@@ -158,7 +157,7 @@ def main() -> int:
     per_stage = {}
     for st in resumed["stages"]:
         name, computed = st["stage"], st["computed_buckets"]
-        total = 1 if name == "s6_canonical" else 32
+        total = STAGES[name]
         expect = max(total - min(at_kill.get(name, 0), total), 0)
         per_stage[name] = {
             "done_at_kill": at_kill.get(name, 0),
@@ -187,9 +186,9 @@ def main() -> int:
     report["control_wall_sec"] = round(time.time() - t2, 1)
     report["control_docs_per_sec"] = control["docs_per_sec"]
 
-    # invariant 3: value-identical final tables
+    # invariant 3: value-identical stage tables
     tables = {}
-    for t in ("s3_consensus", "s7_edges", "s8_nodes"):
+    for t in STAGES:
         nv, hv = _table_hash(victim_dir, t)
         nc, hc = _table_hash(control_dir, t)
         tables[t] = {"rows": nv, "identical": (nv, hv) == (nc, hc)}

@@ -6,7 +6,8 @@ A scaling pair measured across a phase flip is noise, so this driver:
 
 1. probes single-proc memcpy bandwidth (pure numpy, no JVM);
 2. if the phase is fast (>= --min-gbps), runs ONE interleaved lo/hi
-   chain-bench pair, probing again after each run;
+   pair of the checkpointed run_pipeline.py job, probing again after
+   each run;
 3. stamps every measurement with the surrounding probe values so a pair
    whose phase flipped mid-run is visibly discardable;
 4. repeats until --pairs clean pairs are captured or --budget-sec is spent.
@@ -75,7 +76,6 @@ def run_level(
     cores: int,
     n_docs: int,
     timeout: int,
-    job: str = "chain",
     out_base: str = "/tmp",
     local_dirs: str | None = None,
 ) -> dict | None:
@@ -84,30 +84,20 @@ def run_level(
         # route shuffle/spill to the given dirs (e.g. tmpfs) — models each
         # executor's local NVMe instead of this VM's single shared virtio disk
         env = {**os.environ, "SPARK_LOCAL_DIRS": local_dirs}
-    if job == "proto":
-        # the literal BASELINE.md protocol: the full checkpointed
-        # spark-submit-shaped job (run_pipeline.py), fresh JVM per level
-        out_dir = f"{out_base}/proto_gated_{cores}"
-        subprocess.run(["rm", "-rf", out_dir], check=False)
-        cmd = [
-            sys.executable,
-            os.path.join(ROOT, "run_pipeline.py"),
-            "--n-docs",
-            str(n_docs),
-            "--out",
-            out_dir,
-            "--master",
-            f"local[{cores}]",
-        ]
-    else:
-        cmd = [
-            sys.executable,
-            os.path.join(ROOT, "tools", "chain_bench.py"),
-            "--cores",
-            str(cores),
-            "--n-docs",
-            str(n_docs),
-        ]
+    # the literal BASELINE.md protocol: the full checkpointed
+    # spark-submit-shaped job (run_pipeline.py), fresh JVM per level
+    out_dir = f"{out_base}/proto_gated_{cores}"
+    subprocess.run(["rm", "-rf", out_dir], check=False)
+    cmd = [
+        sys.executable,
+        os.path.join(ROOT, "run_pipeline.py"),
+        "--n-docs",
+        str(n_docs),
+        "--out",
+        out_dir,
+        "--master",
+        f"local[{cores}]",
+    ]
     try:
         proc = subprocess.run(
             cmd, capture_output=True, text=True, timeout=timeout, env=env
@@ -147,12 +137,8 @@ def main() -> int:
     p.add_argument("--budget-sec", type=int, default=5400)
     p.add_argument("--run-timeout", type=int, default=1500)
     p.add_argument("--log", default=os.path.join(ROOT, "BENCH", "phase_scaling.jsonl"))
-    p.add_argument("--job", choices=("chain", "proto"), default="chain",
-                   help="chain = in-memory engine chain; proto = full "
-                        "checkpointed run_pipeline.py job (the literal "
-                        "BASELINE.md protocol)")
     p.add_argument("--out-base", default="/tmp",
-                   help="base dir for proto checkpoint output; /dev/shm "
+                   help="base dir for the job's checkpoint output; /dev/shm "
                         "models striped executor-local storage instead of "
                         "the single shared virtio disk")
     p.add_argument("--local-dirs", default=None,
@@ -189,11 +175,10 @@ def main() -> int:
                 cores,
                 args.n_docs,
                 args.run_timeout,
-                job=args.job,
                 out_base=args.out_base,
                 local_dirs=args.local_dirs,
             )
-            time.sleep(5)  # let the chain JVM's shutdown threads drain
+            time.sleep(5)  # let the job JVM's shutdown threads drain
             g = probe_gbps()
             c = probe_cpu(seconds=4.0)
             if g < args.min_gbps or c < args.min_cpu * 1e3:

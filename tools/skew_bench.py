@@ -8,9 +8,10 @@ Two deterministic synthetic mention corpora at the same size N:
   - unskewed: surfaces uniform over a 20k-entity gazetteer;
   - skewed: ONE surface ("atlantis") carries 5% of ALL mentions and is an
     ambiguous alias bridging 50 entities (the CC hot node).
-Job under test = the S5+S6 chain: link_mentions (broadcast gazetteer join +
-per-mention best-candidate aggregate) -> canonical_entities (bipartite
-edge build + connected components), fully materialized. PASS per the
+Job under test = the S5+S6 stages of ``KG_STAGES``: link_mentions
+(broadcast gazetteer join + per-mention best-candidate aggregate) ->
+canonical_entities (bipartite edge build + connected components), fully
+materialized. PASS per the
 directive: wall(skewed) <= 1.5 x wall(unskewed).
 
 A second microbench isolates the self-join defense under at-scale join
@@ -92,12 +93,13 @@ def build_mentions(spark, n: int, skewed: bool):
 
 
 def run_chain(spark, mentions, gaz) -> float:
-    from ner_spark.operators.canonicalize import canonical_entities
-    from ner_spark.operators.linking import link_mentions
+    from ner_spark.plans.pipeline import KG_STAGES, KGPipeline
 
+    stages = {s.name: s for s in KG_STAGES}
+    pipe = KGPipeline(gazetteer=gaz, patterns=None, trusted_combos=[])
     t0 = time.time()
-    linked = link_mentions(mentions, gaz)
-    canon = canonical_entities(linked)
+    linked = stages["s5_linked"].transform(pipe, mentions)
+    canon = stages["s6_canonical"].transform(pipe, linked)
     # materialize the full chain: canonical assignment joined back is the
     # stage output; noop write forces every row without driver transfer
     linked.join(canon, "entity_id", "left").write.format("noop").mode(
