@@ -33,11 +33,44 @@ TAGGED_MENTION = T.StructType(
 )
 
 
-def combined_mentions(
-    docs: DataFrame,
+#: what the fused extractor's UDF closes over: (gazetteer (alias, label)
+#: rows, pattern (pattern_id, regex, label) rows, sorted GRF items)
+RulePayload = tuple[tuple, tuple, tuple]
+
+
+def rule_payload(
     gazetteer: DataFrame,
     patterns: DataFrame,
     gaz_grf: dict[str, str] | None = None,
+) -> RulePayload:
+    """Collect the extractor's dictionaries into this process, one Spark
+    job per table. Gazetteer rows come in (weight desc, alias, label)
+    order — the alias alternation's priority — and patterns in
+    ``pattern_id`` order; a single partition sorted by Spark gives the same
+    order a global ``orderBy`` would, without its range-partitioning jobs."""
+    if gaz_grf is None:
+        from ..synth import GAZ_GRF as gaz_grf
+
+    gaz_rows = tuple(
+        (r["alias"], r["label"])
+        for r in gazetteer.select("alias", "label", "weight")
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("weight"), "alias", "label")
+        .collect()
+    )
+    pattern_rows = tuple(
+        (r["pattern_id"], r["regex"], r["label"])
+        for r in patterns.select("pattern_id", "regex", "label")
+        .coalesce(1)
+        .sortWithinPartitions("pattern_id")
+        .collect()
+    )
+    return gaz_rows, pattern_rows, tuple(sorted(gaz_grf.items()))
+
+
+def combined_mentions(
+    docs: DataFrame,
+    payload: RulePayload,
     source_order: tuple[str, ...] = ("casEN", "spaCy", "stanza"),
     skip_mod: int = 4,
     flip_mod: int = 20,
@@ -46,26 +79,12 @@ def combined_mentions(
 ) -> DataFrame:
     """(doc_uid, text) -> ranked MENTIONS rows for all systems, one pass.
 
+    ``payload`` is the ``rule_payload`` of the gazetteer and patterns; the
+    caller collects it, so a scheduler can fetch it off the critical path.
     ``passthrough_cols`` are carried from ``docs`` into the output
     projection unchanged (e.g. ``event_ts`` on the streaming path, which
     would otherwise need an unbounded stream-stream self-join to reattach).
     """
-    if gaz_grf is None:
-        from ..synth import GAZ_GRF as gaz_grf
-
-    gaz_rows = tuple(
-        (r["alias"], r["label"])
-        for r in gazetteer.select("alias", "label", "weight")
-        .orderBy(F.desc("weight"), "alias", "label")
-        .collect()
-    )
-    pattern_rows = tuple(
-        (r["pattern_id"], r["regex"], r["label"])
-        for r in patterns.select("pattern_id", "regex", "label")
-        .orderBy("pattern_id")
-        .collect()
-    )
-    payload = (gaz_rows, pattern_rows, tuple(sorted(gaz_grf.items())))
     model_sources = [
         (rank, name) for rank, name in enumerate(source_order) if name != "casEN"
     ]

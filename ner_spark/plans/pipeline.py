@@ -15,7 +15,7 @@ The transforms are pure DataFrame composition; the Runner does all I/O.
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extractors.casen import rule_mentions
-from ..extractors.combined import combined_mentions
+from ..extractors.combined import combined_mentions, rule_payload
 from ..extractors.model_stub import model_mentions
 from ..operators import consensus as C
 from ..operators import relations as R
@@ -37,6 +37,8 @@ if TYPE_CHECKING:
 
 #: bucket key of a stage that checkpoints all-or-nothing
 GLOBAL = "global"
+#: the stage whose transform runs the fused extractor
+EXTRACT_STAGE = "s3_consensus"
 
 
 @dataclass(frozen=True)
@@ -132,6 +134,8 @@ class KGPipeline:
     num_partitions: int | None = None
     extra_sources: dict = field(default_factory=dict)
     _cached: list = field(default_factory=list, repr=False)
+    # the extractor payload run_checkpointed prefetches while it runs
+    _payload: Future | None = field(default=None, repr=False)
 
     def mentions_by_source(self, clean_docs: DataFrame) -> dict[str, DataFrame]:
         """Per-source mention tables (three separate Arrow passes) — kept for
@@ -145,7 +149,12 @@ class KGPipeline:
         }
 
     def ranked_mentions(self, clean_docs: DataFrame) -> DataFrame:
-        return combined_mentions(clean_docs, self.gazetteer, self.patterns)
+        # the dictionaries run_checkpointed prefetched, else collected now
+        payload = (
+            self._payload.result() if self._payload is not None
+            else rule_payload(self.gazetteer, self.patterns)
+        )
+        return combined_mentions(clean_docs, payload)
 
     def consensus(self, clean_docs: DataFrame) -> DataFrame:
         if self.extra_sources:
@@ -212,35 +221,55 @@ class KGPipeline:
         submission is thread-safe; the stages write disjoint tables). A
         stage's fingerprint chains those of its inputs, leaving out an input
         that another input already derives from (s4 reads s1 through s3, s7
-        reads s5 through s6): it adds nothing to the lineage."""
+        reads s5 through s6): it adds nothing to the lineage.
+
+        Fingerprints are pure hashes, so all of them are known before S0
+        runs. When ``EXTRACT_STAGE`` has buckets left to compute, the
+        extractor's dictionaries (``rule_payload``) are collected on the
+        same pool, beside S0 and S1, instead of in series at the head of
+        S3; S3's transform waits on that future. A resume whose S3 is
+        complete starts no payload job."""
         stages = stages_until(until)
         anc = _ancestors(stages)
+        in_fp, fp = {}, {"docs": input_fingerprint}
+        for s in stages:
+            in_fp[s.name] = "".join(
+                fp[i] for i in s.inputs if not any(i in anc.get(j, ()) for j in s.inputs)
+            )
+            fp[s.name] = runner.fingerprint(s.name, in_fp[s.name], bucketed=s.key != GLOBAL)
         tables: dict[str, tuple[DataFrame, str]] = {"docs": (docs, input_fingerprint)}
 
-        def run_stage(s: Stage, ins: list[DataFrame], fp: str) -> tuple[DataFrame, str]:
+        def run_stage(s: Stage, ins: list[DataFrame]) -> tuple[DataFrame, str]:
             if s.key == GLOBAL:
                 return runner.global_stage(
-                    s.name, lambda: s.transform(self, *ins), input_fingerprint=fp
+                    s.name, lambda: s.transform(self, *ins), input_fingerprint=in_fp[s.name]
                 )
             return runner.stage(
                 s.name, ins[0], lambda part: s.transform(self, part, *ins[1:]),
-                key=s.key, input_fingerprint=fp,
+                key=s.key, input_fingerprint=in_fp[s.name],
             )
 
+        prefetch = (
+            EXTRACT_STAGE in fp
+            and not self.extra_sources
+            and not set(range(runner.n_buckets))
+            <= runner.catalog.completed_buckets(EXTRACT_STAGE, fp[EXTRACT_STAGE])
+        )
         pending, running = list(stages), {}
-        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
-            while pending or running:
-                for s in [s for s in pending if all(i in tables for i in s.inputs)]:
-                    pending.remove(s)
-                    fp = "".join(
-                        tables[i][1] for i in s.inputs
-                        if not any(i in anc.get(j, ()) for j in s.inputs)
-                    )
-                    ins = [tables[i][0] for i in s.inputs]
-                    running[pool.submit(run_stage, s, ins, fp)] = s
-                done, _ = wait(running, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    tables[running.pop(fut).name] = fut.result()
+        try:
+            with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+                if prefetch:
+                    self._payload = pool.submit(rule_payload, self.gazetteer, self.patterns)
+                while pending or running:
+                    for s in [s for s in pending if all(i in tables for i in s.inputs)]:
+                        pending.remove(s)
+                        ins = [tables[i][0] for i in s.inputs]
+                        running[pool.submit(run_stage, s, ins)] = s
+                    done, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in done:
+                        tables[running.pop(fut).name] = fut.result()
+        finally:
+            self._payload = None
         del tables["docs"]
         return tables
 

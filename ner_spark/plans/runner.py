@@ -239,6 +239,16 @@ class Runner:
         )
         return self.catalog.read(self.spark, name).drop(BUCKET_COL), fingerprint
 
+    def fingerprint(
+        self, name: str, input_fingerprint: str = "", params: str = "",
+        bucketed: bool = True,
+    ) -> str:
+        """A stage's fingerprint: a pure hash of its name, input fingerprint,
+        params and — for a per-bucket stage — the bucket count, so a caller
+        can know it before the stage (or any stage upstream) runs."""
+        parts = (name, input_fingerprint, params)
+        return _fp(*parts, str(self.n_buckets)) if bucketed else _fp(*parts)
+
     def stage(
         self,
         name: str,
@@ -249,7 +259,7 @@ class Runner:
         params: str = "",
     ) -> tuple[DataFrame, str]:
         """Run one bucket-resumable stage; returns (full output DF, fp)."""
-        fingerprint = _fp(name, input_fingerprint, params, str(self.n_buckets))
+        fingerprint = self.fingerprint(name, input_fingerprint, params)
 
         def compute(missing: list[int]) -> DataFrame:
             bucketed_in = with_bucket(input_df, key, self.n_buckets)
@@ -267,7 +277,7 @@ class Runner:
     ) -> tuple[DataFrame, str]:
         """All-or-nothing stage (e.g. connected components): a one-bucket
         write of ``compute()`` into bucket 0."""
-        fingerprint = _fp(name, input_fingerprint, params)
+        fingerprint = self.fingerprint(name, input_fingerprint, params, bucketed=False)
         return self._locked_write(
             name, fingerprint, 1, lambda _: compute().withColumn(BUCKET_COL, F.lit(0))
         )

@@ -6,25 +6,33 @@ available offline in this sandbox, so this module implements the same
 contract on a plain parquet directory (SURVEY.md §7 "Iceberg in sandbox"
 fallback): hash-bucketed layout, idempotent per-partition overwrite, and a
 JSONL manifest recording (stage, bucket, fingerprint, rows, wall_ms) per
-completed partition. Swapping in Iceberg means replacing ``write_buckets``
-with ``overwritePartitions`` and the manifest with a snapshot query — the
+completed partition. A manifest row count is the sum of the ``num_rows``
+in the parquet footers of the bucket's files, read in this process after
+the write (no Spark job reads the table back). Each manifest append is flushed
+and fsynced; a torn last line (a kill mid-append) was never committed and
+is dropped. Swapping in Iceberg means replacing ``write_buckets`` with
+``overwritePartitions`` and the manifest with a snapshot query — the
 runner API does not change.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "_bucket"
 #: bucket dir of the zero-row file that carries an all-empty table's schema
 SCHEMA_BUCKET = -1
+_BUCKET_DIR = re.compile(rf"{BUCKET_COL}=(-?\d+)")
 
 
 def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -102,7 +110,9 @@ class Catalog:
         new fingerprint wipes the table dir + manifest and records a
         marker file BEFORE writing data; the marker (not the manifest) is
         the source of truth, which also covers a crash between the data
-        write and the manifest append. Returns True if the table was reset.
+        write and the manifest append. The marker is written to a temp file
+        and moved into place, so a kill never leaves a torn one. Returns
+        True if the table was reset.
         """
         marker = self.fingerprint_path(table)
         prev = None
@@ -113,8 +123,12 @@ class Catalog:
             return False
         self.reset_table(table)
         os.makedirs(self.root, exist_ok=True)
-        with open(marker, "w", encoding="utf-8") as f:
+        tmp = f"{marker}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w", encoding="utf-8") as f:
             f.write(fingerprint)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, marker)
         return True
 
     # -- concurrent-writer fencing ----------------------------------------
@@ -250,7 +264,6 @@ class Catalog:
         leftovers) before the recompute closes that torn-write window;
         manifested buckets are never touched. Returns the pruned ids.
         """
-        import re
         import shutil
 
         tdir = self.table_dir(table)
@@ -259,7 +272,7 @@ class Catalog:
         pruned = []
         for d in os.listdir(tdir):
             full = os.path.join(tdir, d)
-            m = re.fullmatch(rf"{BUCKET_COL}=(-?\d+)", d)
+            m = _BUCKET_DIR.fullmatch(d)
             if m and os.path.isdir(full):
                 # the empty-table schema marker holds no rows and no
                 # manifest entry; without it an all-empty table is unreadable
@@ -281,11 +294,23 @@ class Catalog:
 
     # -- manifest ----------------------------------------------------------
     def manifest_rows(self, table: str) -> list[dict]:
+        """The manifest's rows. An unparseable LAST line is a torn append
+        (the writer was killed mid-``record``): it was never committed, so
+        it is dropped. A malformed line before the last one is corruption
+        and raises."""
         path = self.manifest_path(table)
         if not os.path.exists(path):
             return []
         with open(path, encoding="utf-8") as f:
-            return [json.loads(line) for line in f if line.strip()]
+            lines = [line for line in f if line.strip()]
+        rows = []
+        for i, line in enumerate(lines):
+            try:
+                rows.append(json.loads(line))
+            except json.JSONDecodeError:
+                if i < len(lines) - 1:
+                    raise
+        return rows
 
     def completed_buckets(self, table: str, fingerprint: str) -> set[int]:
         return {
@@ -295,10 +320,18 @@ class Catalog:
         }
 
     def record(self, table: str, rows: list[dict]) -> None:
+        """Append ``rows`` durably (flush + fsync). A torn last line left by
+        a killed append is cut off first — appending after it would glue
+        the next row onto the fragment."""
         os.makedirs(self.root, exist_ok=True)
-        with open(self.manifest_path(table), "a", encoding="utf-8") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
+        with open(self.manifest_path(table), "a+b") as f:
+            f.seek(0)
+            data = f.read()
+            if data and not data.endswith(b"\n"):
+                f.truncate(data.rfind(b"\n") + 1)
+            f.write("".join(json.dumps(r) + "\n" for r in rows).encode("utf-8"))
+            f.flush()
+            os.fsync(f.fileno())
 
     def clear_manifest(self, table: str) -> None:
         path = self.manifest_path(table)
@@ -319,13 +352,15 @@ class Catalog:
         dynamic partition overwrite replaces exactly the buckets present in
         ``df`` and leaves the rest of the table untouched.
 
-        Row counts for the manifest come from reading BACK the written
-        parquet (restricted to ``buckets`` when given) — counting ``df``
-        itself would re-execute the whole stage transform a second time.
+        Row counts for the manifest come from the parquet footers of the
+        files written (``num_rows`` summed per ``_bucket=<b>`` dir, for the
+        buckets in ``buckets`` when given), read in this process: no Spark
+        job reads the table back, and counting ``df`` itself would re-execute
+        the whole stage transform a second time. Buckets with no rows get no
+        manifest row here.
         """
         t0 = time.time()
-        spark = df.sparkSession
-        with_conf(spark)
+        with_conf(df.sparkSession)
         # cluster rows by bucket before writing: each bucket dir receives
         # exactly one file, independent of task parallelism — otherwise
         # every one of N tasks opens a writer in every one of B bucket dirs
@@ -338,21 +373,15 @@ class Catalog:
         # an all-empty write leaves no parquet footer behind (only _SUCCESS),
         # which would make every later read fail schema inference — write an
         # explicit zero-row file with the schema in that case
-        import glob as _glob
-
-        if not _glob.glob(os.path.join(self.table_dir(table), "**", "*.parquet"), recursive=True):
+        files = self._bucket_files(table)
+        if not any(files.values()):
             df.drop(BUCKET_COL).limit(0).write.mode("overwrite").parquet(
                 os.path.join(self.table_dir(table), f"{BUCKET_COL}={SCHEMA_BUCKET}")
             )
         wall_ms = int((time.time() - t0) * 1000)
-        written = spark.read.parquet(self.table_dir(table))
-        if buckets is not None:
-            written = written.filter(F.col(BUCKET_COL).isin(list(buckets)))
         counts = {
-            r[BUCKET_COL]: r["cnt"]
-            for r in written.groupBy(BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
+            b: sum(pq.read_metadata(f).num_rows for f in files.get(b, ()))
+            for b in (files if buckets is None else buckets)
         }
         rows = [
             {
@@ -365,9 +394,22 @@ class Catalog:
                 "ts": time.time(),
             }
             for b, c in sorted(counts.items())
+            if c
         ]
         self.record(table, rows)
         return rows
+
+    def _bucket_files(self, table: str) -> dict[int, list[str]]:
+        """Bucket id -> the parquet files directly under its ``_bucket=``
+        dir (one level: the table is partitioned on the bucket only)."""
+        tdir = self.table_dir(table)
+        if not os.path.isdir(tdir):
+            return {}
+        return {
+            int(m.group(1)): glob.glob(os.path.join(tdir, d, "*.parquet"))
+            for d in os.listdir(tdir)
+            if (m := _BUCKET_DIR.fullmatch(d))
+        }
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.table_dir(table))
@@ -391,12 +433,11 @@ class Catalog:
         {files_before, files_after, rows} and appends a ``compact`` row per
         bucket to the manifest.
         """
-        import glob as _glob
         import shutil
 
         src = self.table_dir(table)
         staging = src + ".compact"
-        before = _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
+        before = glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
         df = spark.read.parquet(src)
         n_rows = df.count()
         buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
@@ -421,7 +462,7 @@ class Catalog:
             )
         shutil.rmtree(src)
         os.replace(staging, src)
-        after = _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
+        after = glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
         self.record(
             table,
             [

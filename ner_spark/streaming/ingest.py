@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
-from ..extractors.combined import combined_mentions
+from ..extractors.combined import combined_mentions, rule_payload
 from ..operators import consensus as C
 from ..operators.clean import doc_text
 
@@ -58,7 +58,7 @@ def stream_mentions(docs: DataFrame, gazetteer: DataFrame, patterns: DataFrame) 
         "event_ts",
     ).filter(F.col("text").isNotNull() & (F.col("text") != ""))
     return combined_mentions(
-        normalized, gazetteer, patterns, passthrough_cols=("event_ts",)
+        normalized, rule_payload(gazetteer, patterns), passthrough_cols=("event_ts",)
     )
 
 

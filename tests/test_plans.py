@@ -92,13 +92,41 @@ def test_parquet_filter_pushdown(spark):
 def test_extraction_is_narrow_over_clean_docs(spark, gazetteer, patterns):
     """Extraction (pandas UDF + explode) adds no exchange on top of the
     clean-docs aggregation."""
-    from ner_spark.extractors.combined import combined_mentions
+    from ner_spark.extractors.combined import combined_mentions, rule_payload
     from ner_spark.operators.clean import clean
 
     docs = synth.synth_docs(spark, 50, seed=42)
     cd = clean(docs)
     base_exchanges = n_exchanges(cd)
-    assert n_exchanges(combined_mentions(cd, gazetteer, patterns)) == base_exchanges
+    payload = rule_payload(gazetteer, patterns)
+    assert n_exchanges(combined_mentions(cd, payload)) == base_exchanges
+
+
+def test_rule_payload_order_equals_global_sort(spark):
+    """``rule_payload`` sorts one partition instead of a global ``orderBy``:
+    on a 3-partition gazetteer with tied weights (and an alias under two
+    labels) and 3-partition patterns, the collected order is the same."""
+    from ner_spark.extractors.combined import rule_payload
+
+    rows = [(f"E{i}", alias, alias.lower(), label, w) for i, (alias, label, w) in enumerate([
+        ("Paris", "PER", 0.5), ("Lyon", "LOC", 0.9), ("Paris", "LOC", 0.9),
+        ("Anne", "PER", 0.5), ("Nice", "LOC", 0.9), ("Anne", "ORG", 0.5),
+        ("Zola", "PER", 1.0), ("Brest", "LOC", 0.5), ("Metz", "LOC", 0.9),
+    ])]
+    gaz = spark.createDataFrame(rows, schema=schemas.GAZETTEER).repartition(3)
+    pat = synth.synth_patterns(spark).repartition(3)
+    got_gaz, got_pat, _ = rule_payload(gaz, pat)
+    want_gaz = tuple(
+        (r["alias"], r["label"])
+        for r in gaz.select("alias", "label", "weight")
+        .orderBy(F.desc("weight"), "alias", "label").collect()
+    )
+    want_pat = tuple(
+        (r["pattern_id"], r["regex"], r["label"])
+        for r in pat.select("pattern_id", "regex", "label").orderBy("pattern_id").collect()
+    )
+    assert gaz.rdd.getNumPartitions() == 3
+    assert got_gaz == want_gaz and got_pat == want_pat
 
 
 def test_vote_and_promote_stay_jvm_side(spark):

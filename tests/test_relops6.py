@@ -144,6 +144,14 @@ def test_prefix_filter_budget_exceeded_error_mode(spark, corpus):
         release_scratch()
 
 
+def test_prefix_filter_rejects_unknown_on_exceed():
+    """An on_exceed other than 'degrade'/'error' used to take the degrade
+    path silently; it is rejected before any Spark work (docs is never
+    read, so None stands in for it)."""
+    with pytest.raises(ValueError, match="on_exceed"):
+        prefix_filter_pairs(None, threshold_pct=70, max_candidates=0, on_exceed="Error")
+
+
 # ---------------------------------------------------------------------------
 # CUSUM: prefix-scan factorization == literal sequential recurrence
 # ---------------------------------------------------------------------------

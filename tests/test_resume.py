@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ner_spark import synth
 from ner_spark.operators.clean import normalize_docs
-from ner_spark.plans.pipeline import KGPipeline
+from ner_spark.plans.pipeline import KG_STAGES, KGPipeline
 from ner_spark.plans.runner import Runner
 from ner_spark.sources.catalog import Catalog
 
@@ -142,6 +142,88 @@ def test_global_stage_empty_result_resumes_without_recompute(spark, tmp_path_fac
     assert df2.columns == ["src", "dst"]
     assert calls["n"] == 1  # resume did NOT re-run the compute
     assert r2.metrics[0].computed_buckets == 0
+    _assert_manifest_matches_table(spark, r2.catalog, "g_empty", fp)
+
+
+def _assert_manifest_matches_table(spark, cat, table, fp):
+    """Every manifest (bucket, rows) of ``fp`` equals the table's own
+    per-bucket count; a zero-row bucket has no rows on disk."""
+    manifest = {r["bucket"]: r["rows"] for r in cat.manifest_rows(table)
+                if r["fingerprint"] == fp}
+    on_disk = {
+        r["_bucket"]: r["count"]
+        for r in spark.read.parquet(cat.table_dir(table)).groupBy("_bucket").count().collect()
+    }
+    assert set(on_disk) <= set(manifest), (on_disk, manifest)
+    assert manifest == {b: on_disk.get(b, 0) for b in manifest}, (manifest, on_disk)
+
+
+@pytest.mark.parametrize("kind", ["per_bucket", "global"])
+def test_manifest_rows_equal_table_counts(spark, tmp_path_factory, kind):
+    """Manifest row counts come from the parquet footers of the written
+    files. They equal a read-back count for a stage with zero-row buckets,
+    and again after a rerun that rewrites one bucket of a table whose
+    other buckets stay manifested."""
+    out = tmp_path_factory.mktemp(f"parity_{kind}")
+    docs = synth.synth_docs(spark, 40, seed=3)
+
+    def some(df):  # three docs in four buckets: at least one gets no rows
+        return normalize_docs(df).filter(F.col("doc_id") < "doc00000003")
+
+    def run():
+        runner = Runner(spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS)
+        if kind == "global":
+            return runner, runner.global_stage("t", lambda: some(docs), input_fingerprint="p")
+        return runner, runner.stage("t", docs, some, key="doc_id", input_fingerprint="p")
+
+    runner, (_, fp) = run()
+    cat = runner.catalog
+    rows = {r["bucket"]: r["rows"] for r in cat.manifest_rows("t")}
+    if kind == "per_bucket":
+        assert 0 in rows.values(), rows  # the zero-row bucket case is covered
+    _assert_manifest_matches_table(spark, cat, "t", fp)
+
+    redo = max(rows, key=rows.get)
+    kept = [r for r in cat.manifest_rows("t") if r["bucket"] != redo]
+    with open(cat.manifest_path("t"), "w", encoding="utf-8") as f:
+        f.writelines(json.dumps(r) + "\n" for r in kept)
+    runner2, _ = run()
+    assert runner2.metrics[0].computed_buckets == 1
+    _assert_manifest_matches_table(spark, cat, "t", fp)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Number of Spark jobs ``fn()`` launches from this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_buckets_launches_no_jobs_beyond_the_write(spark, tmp_path_factory):
+    """Counting a write's rows takes no Spark job: ``write_buckets``
+    launches no more jobs than the bucket-clustered parquet write alone
+    (the manifest used to read the table back: three more jobs)."""
+    from ner_spark.sources.catalog import BUCKET_COL, with_bucket, with_conf
+
+    out = tmp_path_factory.mktemp("write_jobs")
+    df = with_bucket(normalize_docs(synth.synth_docs(spark, 60, seed=4)), "doc_id", N_BUCKETS)
+    with_conf(spark)
+    write_only = _jobs_in_group(
+        spark, "write_only",
+        lambda: df.repartition(N_BUCKETS, F.col(BUCKET_COL)).write.mode("overwrite")
+        .partitionBy(BUCKET_COL).parquet(str(out / "plain")),
+    )
+    cat = Catalog(str(out / "cat"))
+    with_manifest = _jobs_in_group(
+        spark, "write_buckets",
+        lambda: cat.write_buckets(df, "t", "fp", stage="t", buckets=list(range(N_BUCKETS))),
+    )
+    assert write_only >= 1
+    assert with_manifest <= write_only, (with_manifest, write_only)
 
 
 def _same_rows(a, b) -> bool:
@@ -499,3 +581,87 @@ def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
     cat = Catalog(str(out))
     seen = [(r["bucket"], r["fingerprint"]) for r in cat.manifest_rows("s0_normalize")]
     assert len(seen) == len(set(seen)) == N_BUCKETS, seen
+
+
+KG_TABLES = [s.name for s in KG_STAGES]
+
+
+def _snapshot(spark, cat):
+    return {t: sorted(map(tuple, cat.read(spark, t).drop("_bucket").collect()))
+            for t in KG_TABLES}
+
+
+@pytest.fixture
+def count_payloads(monkeypatch):
+    """Counts the extractor-dictionary collections the pipeline starts."""
+    from ner_spark.plans import pipeline as pipeline_mod
+
+    calls = []
+    real = pipeline_mod.rule_payload
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "rule_payload", counted)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, tmp_path_factory):
+    """A completed S0-S8 catalog and the tables of that uninterrupted run."""
+    out = tmp_path_factory.mktemp("kg_full")
+    _build(spark, out, until=KG_STAGES[-1].name)
+    return out, _snapshot(spark, Catalog(str(out)))
+
+
+def test_cold_run_collects_the_extractor_payload_once(spark, tmp_path_factory, count_payloads):
+    runner, _ = _build(spark, tmp_path_factory.mktemp("kg_payload"))
+    assert len(count_payloads) == 1
+    assert {m.table: m.computed_buckets for m in runner.metrics}["s3_consensus"] == N_BUCKETS
+
+
+def test_rerun_over_complete_catalog_starts_no_payload_job(spark, full_run, count_payloads):
+    out, _ = full_run
+    runner, _ = _build(spark, out, until=KG_STAGES[-1].name)
+    assert all(m.computed_buckets == 0 for m in runner.metrics), runner.metrics
+    assert count_payloads == []
+
+
+def test_torn_manifest_line_recomputes_only_that_bucket(spark, full_run):
+    """A kill in the middle of a manifest append leaves a torn last line.
+    It was never committed: the resume drops it, recomputes that one
+    bucket, and every table equals the uninterrupted run's."""
+    out, control = full_run
+    cat = Catalog(str(out))
+    path = cat.manifest_path("s0_normalize")
+    with open(path, "rb") as f:
+        data = f.read()
+    last = data.rstrip(b"\n").rsplit(b"\n", 1)[-1]
+    torn_bucket = json.loads(last)["bucket"]
+    with open(path, "wb") as f:
+        f.write(data[: len(data) - len(last) // 2 - 1])
+
+    runner, _ = _build(spark, out, until=KG_STAGES[-1].name)
+    computed = {m.table: m.computed_buckets for m in runner.metrics}
+    assert computed == {t: int(t == "s0_normalize") for t in KG_TABLES}, computed
+    rows = cat.manifest_rows("s0_normalize")
+    assert sorted(r["bucket"] for r in rows) == list(range(N_BUCKETS))
+    assert rows[-1]["bucket"] == torn_bucket
+    assert _snapshot(spark, cat) == control
+
+
+def test_garbled_manifest_middle_line_raises(tmp_path):
+    cat = Catalog(str(tmp_path))
+    cat.record("t", [{"bucket": 0}, {"bucket": 1}])
+    with open(cat.manifest_path("t"), "a", encoding="utf-8") as f:
+        f.write('{"bucket": 2')  # torn append: dropped
+    assert [r["bucket"] for r in cat.manifest_rows("t")] == [0, 1]
+    cat.record("t", [{"bucket": 3}])  # cuts the fragment before appending
+    assert [r["bucket"] for r in cat.manifest_rows("t")] == [0, 1, 3]
+    lines = open(cat.manifest_path("t"), encoding="utf-8").read().splitlines()
+    lines.insert(1, '{"bucket": 9')
+    with open(cat.manifest_path("t"), "w", encoding="utf-8") as f:
+        f.write("\n".join(lines) + "\n")
+    with pytest.raises(json.JSONDecodeError):
+        cat.manifest_rows("t")

@@ -137,6 +137,89 @@ def test_real_decode_bmp_ppm_wav_roundtrip(spark):
     assert abs(amp - (0 + 16384 / 32768 + 16384 / 32768 + 32767 / 32768) / 4) < 1e-4
 
 
+def _bmp_sums_loop(payload, data_off, width, h, nch):
+    """The per-pixel reference loop the BMP decoder used to run."""
+    row_bytes = (width * nch + 3) // 4 * 4
+    sums, npx = [0, 0, 0], 0
+    for r in range(h):
+        base = data_off + r * row_bytes
+        for c in range(width):
+            px = base + c * nch
+            if px + 3 > len(payload):
+                raise ValueError("BMP pixel array truncated")
+            sums[0] += payload[px + 2]
+            sums[1] += payload[px + 1]
+            sums[2] += payload[px]
+            npx += 1
+    return sums, npx
+
+
+def _random_bmp(rng, width, height, bpp, gap):
+    import struct as _s
+
+    nch = bpp // 8
+    row_bytes = (width * nch + 3) // 4 * 4
+    raster = rng.randbytes(row_bytes * abs(height))
+    off = 54 + gap
+    info = _s.pack("<IiiHHIIiiII", 40, width, height, 1, bpp, 0, len(raster), 0, 0, 0, 0)
+    head = _s.pack("<2sIHHI", b"BM", off + len(raster), 0, 0, off)
+    return head + info + rng.randbytes(gap) + raster
+
+
+def _outcome(fn, *args):
+    try:
+        return fn(*args)
+    except ValueError as e:
+        return ("ValueError", str(e))
+
+
+def test_bmp_ppm_decode_matches_per_pixel_loops():
+    """The numpy BMP/P6 decoders give bit-identical features to the
+    per-pixel loops they replaced — padded rows, 24/32 bpp, negative
+    (top-down) heights — and raise the same truncation errors."""
+    import random
+
+    rng = random.Random(7)
+
+    def bmp_loop(payload):
+        import struct as _s
+
+        if len(payload) < 54:
+            raise ValueError("BMP truncated before BITMAPINFOHEADER")
+        data_off = _s.unpack_from("<I", payload, 10)[0]
+        width, height = _s.unpack_from("<ii", payload, 18)
+        nch = _s.unpack_from("<H", payload, 28)[0] // 8
+        sums, npx = _bmp_sums_loop(payload, data_off, width, abs(height), nch)
+        feats = [s / (255.0 * npx) for s in sums] if npx else [0.0, 0.0, 0.0]
+        return width, abs(height), 1, feats
+
+    checked = 0
+    for _ in range(60):
+        width, height = rng.randint(1, 9), rng.choice([-1, 1]) * rng.randint(1, 6)
+        bmp = _random_bmp(rng, width, height, rng.choice([24, 32]), rng.randint(0, 5))
+        for cut in {len(bmp), len(bmp) - 1, len(bmp) - 4, rng.randint(50, len(bmp))}:
+            want = _outcome(bmp_loop, bmp[:cut])
+            assert _outcome(MM._decode_bmp, bmp[:cut]) == want, (width, height, cut)
+            checked += isinstance(want, tuple) and want[0] != "ValueError"
+    assert checked > 60
+
+    def ppm_loop(payload):
+        head, raster = payload.split(b"\n255\n", 1)
+        width, height = map(int, head.split()[-2:])
+        npx = width * height
+        raster = raster[: npx * 3]
+        if len(raster) < npx * 3:
+            raise ValueError("PPM raster truncated")
+        sums = [sum(raster[c::3]) for c in range(3)]
+        return width, height, 1, [s / (255 * npx) for s in sums]
+
+    for _ in range(40):
+        width, height = rng.randint(1, 12), rng.randint(1, 12)
+        ppm = f"P6\n# c\n{width} {height}\n255\n".encode() + rng.randbytes(3 * width * height)
+        for cut in (len(ppm), len(ppm) - 1):
+            assert _outcome(MM._decode_ppm, ppm[:cut]) == _outcome(ppm_loop, ppm[:cut])
+
+
 def test_real_decode_unsupported_codec_still_raises(spark):
     """NotImplementedError is now reserved for genuinely unsupported
     codecs (e.g. PNG magic) — not for the whole fake=False branch."""
